@@ -8,25 +8,20 @@ same R-7 rule, selecting the same order statistics; its interpolation
 form ``lower*(k+1-h) + higher*(h-k)`` can differ from d3's
 ``a + (b-a)*(h-k)`` in the LAST ULP when it interpolates between
 unequal neighbors (see _interp), so the bit-for-bit contract this repo
-tests is against Catalyst's Percentile — all three layouts here and the
-DuckDB oracle reproduce THAT arithmetic exactly. The approximate
-``percentile_approx`` matches neither and is deliberately not used for
-the exact surface.
+tests is against Catalyst's Percentile — column_extents, its exact
+fallback and the DuckDB oracle reproduce THAT arithmetic exactly. The
+approximate ``percentile_approx`` matches neither and is deliberately
+not used.
 
-Spark-first design: unpivot (melt) the wide table so the aggregation is one
-``groupBy(column_id)`` over (column, value) pairs — partial min/max collapse
-map-side; percentile gathers values per column. Non-numeric/blank cells are
-null after the cast and every agg ignores nulls, matching the reference's
-drop-before-aggregate (extract-extents.js:24-27). Output row order follows
-input column order (extract-extents.js:41) via an explicit position column —
-no nondeterministic driver ordering.
-
-Scale note: percentile over a 100 TB fact table would gather per-column
-value lists on reducers; with ~500 wide columns each reducer holds one
-column's values (~rows/col doubles). For truly huge column cardinalities the
-engine exposes approx_extents() (Greenwald-Khanna percentile_approx) as the
-documented approximate path, and sketch_extents()/arrow_extents() as the
-exact bounded-memory paths.
+One path: a single Spark projection normalizes every metric cell
+(``try_cast`` to double, NaN -> null — blanks, junk and NaN drop per
+cell, matching extract-extents.js:24-27), then an Arrow two-pass
+order-statistic selection runs on those doubles. Neither pass melts the
+table or shuffles cell values: summaries stream back to the driver
+sized |cols| x |batches|. Columns the selection cannot settle within its
+memory cap take the exact percentile aggregate over the melted column
+(_exact_melt_quantiles). Output row order follows input column order
+(extract-extents.js:41).
 """
 
 from __future__ import annotations
@@ -36,77 +31,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-# Above this many metric columns the melt layout shards per-column value
-# gathers across reducers; below it, one wide aggregation avoids shuffling
-# any cell values at all (only partial agg buffers move).
-WIDE_AGG_MAX_COLS = 64
-
-# r17 (guide §2/§5): the wide layout's EXACT percentile funnels every
-# cell value of every column into ONE final reducer (a global agg with
-# value-buffering aggregates) — fine at bench scale (measured fastest:
-# 3.6 s vs melt 10 s / sketch 7 s / arrow 4.1 s at sf0.1 x 4 cols), a
-# single-task OOM at corpus scale. Auto-dispatch therefore also looks
-# at the INPUT BYTES (file-index metadata only): above this bound the
-# few-column exact path switches to the bounded-memory layouts
-# (arrow_extents for all-numeric inputs, melt otherwise — the same
-# pair the many-column branch already dispatches to). Env-overridable
-# so cluster profiles can tune it without a code change.
-WIDE_AGG_MAX_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_EXTENTS_WIDE_MAX_BYTES", str(2 << 30)
-    )
-)
-
-
-def _input_file_bytes(df: DataFrame) -> int:
-    """Total size of the scan's input files — pure file-index metadata
-    (the widen_partitions discipline: never touch df.rdd here).
-
-    Returns 0 when the plan is not a file scan at all (derived/local
-    frames — driver-resident by construction, so the wide layout is
-    safe), and -1 — UNKNOWN, which the caller must treat as big — when
-    a scan exists but its sizes cannot be determined. r18 (VERDICT r17
-    item 1): the r17 version statted every URI with os.path.getsize,
-    which raises on s3a://hdfs:// paths, and mapped the failure to 0 —
-    silently re-enabling the single-reducer wide layout on every
-    non-local filesystem, the exact OOM the gate exists to prevent.
-    Non-``file:`` schemes now stat through the Hadoop FileSystem API
-    (metadata RPCs only; Hadoop caches one FS instance per scheme), and
-    any failure is UNKNOWN, not small: fail safe, not fail fast."""
-    import os as _os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return -1  # cannot even enumerate: unknown, treat as big
-    total = 0
-    remote: list[str] = []
-    for f in files:
-        if f.startswith("file:"):
-            try:
-                total += _os.path.getsize(f.removeprefix("file:"))
-            except OSError:
-                return -1
-        elif "://" not in f:  # bare local path
-            try:
-                total += _os.path.getsize(f)
-            except OSError:
-                return -1
-        else:
-            remote.append(f)
-    if remote:
-        try:
-            sess = df.sparkSession
-            jvm = sess._jvm
-            hconf = sess._jsc.hadoopConfiguration()
-            for f in remote:
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                fs = p.getFileSystem(hconf)
-                total += fs.getFileStatus(p).getLen()
-        except Exception:
-            return -1  # unstatable remote scan: unknown, treat as big
-    return total
+_SCHEMA = "id string, min double, max double, q1 double, q99 double"
 
 
 def _interp(lower: float, higher: float, n: int, p: float) -> float:
@@ -114,10 +39,9 @@ def _interp(lower: float, higher: float, n: int, p: float) -> float:
     integral positions return the order statistic; fractional ones use
     the symmetric weighted form lower*(k+1-h) + higher*(h-k) — NOT
     d3's a+(b-a)*f, whose rounding can differ in the last ulp. This is
-    the ONE copy of the bit-exactness-critical arithmetic; every
-    bounded-gather path and driver-side merge must call it (a second
-    copy that drifts would silently break the cross-path hash-match
-    the twin tests pin)."""
+    the ONE copy of the bit-exactness-critical arithmetic; the
+    selection must call it (a second copy that drifts would silently
+    break the hash-match with the exact fallback and the oracle)."""
     h = (n - 1) * p
     k = math.floor(h)
     if k == math.ceil(h) or lower == higher:
@@ -133,22 +57,28 @@ def _nan_safe(v):
     return F.when(~F.isnan(v), v)
 
 
+def _doubles(wide_df: DataFrame, cols: list[str]) -> DataFrame:
+    """The one cell rule: try_cast to double (blanks/junk -> null,
+    ANSI-safe), then NaN -> null."""
+    return wide_df.select(
+        [_nan_safe(F.col(c).try_cast("double")).alias(c) for c in cols]
+    )
+
+
 def _exact_melt_quantiles(
     wide_df: DataFrame,
     cols: list[str],
     q_low: float,
     q_high: float,
 ) -> dict[str, tuple]:
-    """The exact-percentile fallback shared by the bounded-gather paths:
-    melt ``cols`` (try_cast + NaN->null, the standard cell
-    normalization) and run the fused exact percentile per column.
-    Returns {col: (q1, q99)}."""
+    """The exact fallback: melt ``cols`` under the standard cell rule
+    and run one fused exact percentile per column — each reducer
+    gathers ONE column's values. Returns {col: (q1, q99)}, (None, None)
+    for an all-null column; a zero-row input returns {}."""
     ps = F.array(F.lit(q_low), F.lit(q_high))
-    melted = wide_df.select(
-        [_nan_safe(F.col(c).try_cast("double")).alias(c) for c in cols]
-    ).unpivot([], cols, "id", "value")
+    melted = _doubles(wide_df, cols).unpivot([], cols, "id", "value")
     return {
-        r["id"]: (r["q"][0], r["q"][1])
+        r["id"]: tuple(r["q"] or (None, None))
         for r in melted.groupBy("id")
         .agg(F.percentile("value", ps).alias("q"))
         .collect()
@@ -160,428 +90,88 @@ def column_extents(
     exclude: tuple[str, ...] = ("GEOID", "n", "pl"),
     q_low: float = 0.01,
     q_high: float = 0.99,
-    exact: bool = True,
-    layout: str = "auto",
 ) -> DataFrame:
-    """One row per metric column: id, min, max, q1, q99 (input column order).
+    """One row per metric column: id, min, max, q1, q99 (input column
+    order). An input with no metric columns gives an empty frame; a
+    zero-row input gives one all-null row per column.
 
-    Two physical layouts, same semantics:
-      * ``wide``  (default up to WIDE_AGG_MAX_COLS columns AND up to
-        WIDE_AGG_MAX_BYTES of scanned input — above the byte gate the
-        exact wide percentile would buffer every cell of every column
-        on ONE final reducer, so auto-dispatch switches to the
-        bounded-memory layouts, r17): one global aggregation of 4 exprs
-        per column — partial aggregation collapses map-side, the
-        shuffle carries one buffer per partition, and a final ``stack``
-        reshapes the single row to per-column rows. Measured ~2x faster
-        than melt at sf0.1 / 4 columns (3.5s vs 7.2s warm, 32 cores) —
-        melt pays a full cell-level shuffle.
-      * ``melt``  (many columns): unpivot -> groupBy(column id) so each
-        reducer gathers ONE column's values for the exact percentile —
-        memory per task stays bounded by one column, not the whole table.
-
-    CONTRACT NOTE: when auto-dispatch selects the Arrow path (wide
-    ALL-NUMERIC input, > WIDE_AGG_MAX_COLS columns), the call executes
-    its two scan passes EAGERLY and returns a small materialized frame —
-    unlike the wide/melt layouts, which stay lazy. Callers that only
-    want to CONSTRUCT a plan (EXPLAIN, conditional writes) should pass
-    ``layout="melt"`` explicitly.
-    """
-    from ..sources.registry import widen_partitions
-
-    metric_cols = [c for c in wide_df.columns if c not in exclude]
-    if layout == "auto":
-        from pyspark.sql import types as T
-
-        # the Arrow two-pass path (arrow_extents) wins by ~3x over melt,
-        # but its pandas numeric coercion is only guaranteed equivalent
-        # to try_cast on ALREADY-NUMERIC columns — string columns keep
-        # the melt layout
-        numeric = all(
-            isinstance(f.dataType, T.NumericType)
-            for f in wide_df.schema.fields
-            if f.name in set(metric_cols)
-        )
-        if len(metric_cols) <= WIDE_AGG_MAX_COLS:
-            # few columns: wide is fastest at bench scale, but its exact
-            # percentile buffers EVERY cell on one final reducer — above
-            # the byte gate, take the bounded-memory layouts instead
-            # (r17, guide §2/§5; results identical, twin-test pinned).
-            # A scan whose size cannot be determined (-1: remote scheme
-            # the driver cannot stat, unstatable files) counts as BIG —
-            # an unknown corpus must not be funneled through one
-            # reducer (r18, fail-safe); size 0 means "not a file scan"
-            # (local/derived frames) and keeps the wide layout.
-            sz = _input_file_bytes(wide_df) if exact else 0
-            big = exact and (sz > WIDE_AGG_MAX_BYTES or sz < 0)
-            if big:
-                layout = "arrow" if numeric else "melt"
-            else:
-                layout = "wide"
-        else:
-            layout = "arrow" if (numeric and exact) else "melt"
-    if layout == "arrow":
-        return arrow_extents(
-            wide_df, exclude=exclude, q_low=q_low, q_high=q_high
-        )
-    # percentile partials buffer every value — parallelize the map side
-    # when the input is a narrow local scan (no-op for non-scan inputs)
-    wide_df = widen_partitions(wide_df)
-
-    def quantiles(col):
-        # ONE fused percentile(col, array(lo, hi)) per column, not two
-        # separate calls: each exact-percentile aggregate buffers (and
-        # the final reducer sorts) its own copy of every value, so the
-        # fused form halves both the partial-agg bytes shuffled and the
-        # reducer-side sorts — measured 3.6s -> 2.2s warm at sf0.1 / 4
-        # columns on the wide layout.
-        ps = F.array(F.lit(q_low), F.lit(q_high))
-        if exact:
-            return F.percentile(col, ps)
-        return F.percentile_approx(col, ps, F.lit(10000))
-
-    if layout == "wide":
-        aggs = []
-        for c in metric_cols:
-            v = _nan_safe(F.col(c).try_cast("double"))
-            aggs += [
-                F.min(v).alias(f"{c}__min"),
-                F.max(v).alias(f"{c}__max"),
-                quantiles(v).alias(f"{c}__q"),
-            ]
-        one = wide_df.agg(*aggs)
-        # stack preserves argument order = input column order
-        stack_args = [F.lit(len(metric_cols))]
-        for c in metric_cols:
-            stack_args += [
-                F.lit(c),
-                F.col(f"`{c}__min`"),
-                F.col(f"`{c}__max`"),
-                F.col(f"`{c}__q`")[0],
-                F.col(f"`{c}__q`")[1],
-            ]
-        return one.select(
-            F.stack(*stack_args).alias("id", "min", "max", "q1", "q99")
-        )
-
-    # melt: unpivot keeps one scan; values try_cast to double — blanks and
-    # junk become null (ANSI-safe), matching the reference's isNaN-drop
-    melted = wide_df.select(
-        [_nan_safe(F.col(c).try_cast("double")).alias(c) for c in metric_cols]
-    ).unpivot([], metric_cols, "id", "value")
-    agg = melted.groupBy("id").agg(
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        quantiles(F.col("value")).alias("__q"),
-    )
-    agg = agg.select(
-        "id", "min", "max",
-        F.col("__q")[0].alias("q1"),
-        F.col("__q")[1].alias("q99"),
-    )
-    # stable output order = input column order (extract-extents.js:41)
-    pos = F.array_position(F.array(*[F.lit(c) for c in metric_cols]), F.col("id"))
-    return agg.withColumn("__pos", pos).orderBy("__pos").drop("__pos")
-
-
-def approx_extents(wide_df: DataFrame, **kw) -> DataFrame:
-    """Greenwald-Khanna (percentile_approx) variant for columns too hot\n    for the exact gather — uniform RANK-error bound n/accuracy, not a\n    t-digest-style relative tail accuracy."""
-    return column_extents(wide_df, exact=False, **kw)
-
-
-def sketch_extents(
-    wide_df: DataFrame,
-    exclude: tuple[str, ...] = ("GEOID", "n", "pl"),
-    q_low: float = 0.01,
-    q_high: float = 0.99,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Bit-identical extents via sketch-bracketed exact selection — the
-    100 TB path for exact R-7 percentiles.
-
-    The exact ``percentile`` aggregate buffers and sorts EVERY cell per
-    column; at n rows x 570 columns that is a cell-volume shuffle plus a
-    per-column sort — the dominant cost of the melt layout. But an exact
-    quantile only needs TWO order statistics (ranks floor(h) and
-    floor(h)+1, h=(n-1)p). So:
-
-      pass A (melt):   count / min / max / percentile_approx at
-                       p +/- 5/accuracy per column. GK sketches merge —
-                       the shuffle carries compressed sketch buffers per
-                       (partition, column), never cell values.
-      pass B (melt):   per column, count of values strictly below the
-                       bracket and the in-bracket values COMPRESSED to
-                       (value, count) runs — ties collapse, so a heavy
-                       tie mass at a bracket endpoint costs one row, and
-                       the reducer buffer is bounded by DISTINCT
-                       in-bracket values (<= the ~10/accuracy fraction).
-                       GK rank error is a hard <= n/accuracy bound, so
-                       the bracket provably contains both order
-                       statistics; a rank-range check re-verifies at
-                       runtime and any violating column falls back to
-                       the exact agg. A side already solved (zero-width
-                       bracket) carries NULL bounds so it gathers
-                       nothing.
-      driver:          R-7 interpolation from the two order statistics —
-                       identical IEEE arithmetic to d3.quantile and
-                       Spark's Percentile (a + (b-a)*(h-floor(h))).
-
-    Deterministic guards: columns with n <= 4*accuracy take the exact
-    aggregate directly (the sketch margin 5n/accuracy needs n large;
-    small columns are cheap anyway); a bracket whose endpoints are equal
-    IS the quantile (every in-bracket value equals it) — this also
-    short-circuits near-constant columns whose brackets would be huge.
-
-    Output is identical to column_extents (same schema, same input-column
-    row order) and hash-matches the same DuckDB oracle."""
-    from ..sources.registry import widen_partitions
-
-    metric_cols = [c for c in wide_df.columns if c not in exclude]
-    wide_df = widen_partitions(wide_df)
-    delta = 5.0 / accuracy
-
-    melted = wide_df.select(
-        [_nan_safe(F.col(c).try_cast("double")).alias(c) for c in metric_cols]
-    ).unpivot([], metric_cols, "id", "value")
-
-    probe_ps = [
-        max(0.0, q_low - delta), min(1.0, q_low + delta),
-        max(0.0, q_high - delta), min(1.0, q_high + delta),
-    ]
-    stats = {
-        r["id"]: r
-        for r in melted.groupBy("id")
-        .agg(
-            F.count("value").alias("n"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-            F.percentile_approx(
-                "value", F.array(*[F.lit(p) for p in probe_ps]), F.lit(accuracy)
-            ).alias("br"),
-        )
-        .collect()
-    }
-
-    def order_stat_ranks(n: int, p: float) -> tuple[int, int]:
-        h = (n - 1) * p
-        k = math.floor(h)
-        return k, min(math.ceil(h), n - 1)
-
-    # classify: tiny/empty columns -> exact aggregate; zero-width
-    # brackets -> answered already; the rest -> pass-B bracket gather
-    exact_cols: list[str] = []
-    solved: dict[str, tuple] = {}  # id -> (q1, q99) when both known
-    bracket_cols: dict[str, tuple] = {}
-    for c in metric_cols:
-        r = stats.get(c)
-        if r is None or r["n"] == 0:
-            solved[c] = (None, None)
-        elif r["n"] <= 4 * accuracy:
-            exact_cols.append(c)
-        else:
-            lo1, hi1, lo9, hi9 = r["br"]
-            # zero-width bracket: both order statistics equal the endpoint
-            # -> run the same interpolation with lower == higher
-            q1 = _interp(lo1, hi1, r["n"], q_low) if lo1 == hi1 else None
-            q9 = _interp(lo9, hi9, r["n"], q_high) if lo9 == hi9 else None
-            if q1 is not None and q9 is not None:
-                solved[c] = (q1, q9)
-            else:
-                bracket_cols[c] = (lo1, hi1, lo9, hi9, q1, q9)
-
-    if bracket_cols:
-        spark = wide_df.sparkSession
-        # a side already solved (zero-width) gets NULL bounds so its
-        # between() never matches: without this, a heavy-tie column
-        # whose q1 is pre-solved would still gather every value equal
-        # to that endpoint — the exact blowup the zero-width guard
-        # exists to prevent
-        br_df = spark.createDataFrame(
-            [
-                (
-                    c,
-                    *((None, None) if v[4] is not None else (v[0], v[1])),
-                    *((None, None) if v[5] is not None else (v[2], v[3])),
-                )
-                for c, v in bracket_cols.items()
-            ],
-            "id string, lo1 double, hi1 double, lo9 double, hi9 double",
-        )
-        v = F.col("value")
-        joined = melted.join(F.broadcast(br_df), "id")
-        below = {
-            r["id"]: r
-            for r in joined.groupBy("id")
-            .agg(
-                F.sum((v < F.col("lo1")).cast("long")).alias("below1"),
-                F.sum((v < F.col("lo9")).cast("long")).alias("below9"),
-            )
-            .collect()
-        }
-        # in-bracket values COMPRESSED to (value, count): ties collapse
-        # to one row, so a reducer's buffer is bounded by the DISTINCT
-        # in-bracket values (<= the ~10/accuracy fraction, and tiny when
-        # an endpoint carries a large tie mass — the case a raw
-        # collect_list would gather O(n) values for)
-        vc_rows = (
-            joined.filter(
-                v.between(F.col("lo1"), F.col("hi1"))
-                | v.between(F.col("lo9"), F.col("hi9"))
-            )
-            .groupBy("id", "value")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        vcs: dict[str, list] = {c: [] for c in bracket_cols}
-        for r in vc_rows:
-            vcs[r["id"]].append((r["value"], r["cnt"]))
-        for c in vcs:
-            vcs[c].sort(key=lambda t: t[0])
-
-        def order_stat(vc: list, lo, hi, below: int, rank: int):
-            """rank-th (0-based, global) value via cumulative counts of
-            the side's in-bracket (value, count) runs; None if the rank
-            falls outside the bracket (sketch bound violated)."""
-            r = rank - below
-            if r < 0:
-                return None
-            cum = 0
-            for val, cnt in vc:
-                if not (lo <= val <= hi):
-                    continue
-                cum += cnt
-                if r < cum:
-                    return val
-            return None
-
-        for c, (lo1, hi1, lo9, hi9, q1, q9) in bracket_cols.items():
-            n = stats[c]["n"]
-            out = []
-            for p, qpre, bel, lo, hi in (
-                (q_low, q1, below[c]["below1"], lo1, hi1),
-                (q_high, q9, below[c]["below9"], lo9, hi9),
-            ):
-                if qpre is not None:
-                    out.append(qpre)
-                    continue
-                k, k1 = order_stat_ranks(n, p)
-                a = order_stat(vcs[c], lo, hi, bel, k)
-                b = order_stat(vcs[c], lo, hi, bel, k1)
-                if a is None or b is None:
-                    out.append(None)  # sketch bound violated -> exact
-                    continue
-                out.append(_interp(a, b, n, p))
-            if out[0] is None or out[1] is None:
-                exact_cols.append(c)
-            else:
-                solved[c] = tuple(out)
-
-    if exact_cols:
-        solved.update(
-            _exact_melt_quantiles(wide_df, exact_cols, q_low, q_high)
-        )
-
-    rows = []
-    for c in metric_cols:
-        r = stats.get(c)
-        mn = r["mn"] if r is not None else None
-        mx = r["mx"] if r is not None else None
-        q1, q9 = solved[c]
-        rows.append((c, mn, mx, q1, q9))
-    return wide_df.sparkSession.createDataFrame(
-        rows, "id string, min double, max double, q1 double, q99 double"
-    )
-
-
-def arrow_extents(
-    wide_df: DataFrame,
-    exclude: tuple[str, ...] = ("GEOID", "n", "pl"),
-    q_low: float = 0.01,
-    q_high: float = 0.99,
-    delta: float = 0.002,
-) -> DataFrame:
-    """Bit-identical extents via Arrow-vectorized two-pass selection —
-    the fastest exact path for WIDE tables (hundreds of columns).
-
-    The melt layouts pay a per-CELL row expansion (|rows| x |cols| JVM
-    rows through unpivot + aggregation); at 240k x 570 that is 137M rows
-    of expression-interpreter work per pass. This path never melts:
+    Exact R-7 quantiles only need TWO order statistics per side (ranks
+    floor(h) and ceil(h), h = (n-1)p), so:
 
       pass A (mapInPandas): per Arrow batch, NumPy computes per-column
-              count / min / max and CANDIDATE brackets at p +/- delta
-              (np.quantile on the batch). Only (batch x column) summary
-              rows leave the workers.
-      driver: merge — global count/min/max are exact (sum/min/max of
-              batch values); the global bracket is the min/max envelope
-              of the batch candidates. The envelope is heuristic, NOT
-              assumed correct: pass B verifies it.
-      pass B (mapInPandas): per batch per column, count of values
-              strictly below each bracket lo + the values inside the
-              bracket. Driver merges, sorts the in-bracket values, and
-              checks the needed order statistics (floor(h), ceil(h),
-              h = (n-1)p) actually landed inside; any column whose
-              bracket missed — and any all-null/tiny column — falls
-              back to the exact percentile aggregate. Interpolation is
-              the same IEEE arithmetic as Catalyst's Percentile
-              (lower*(k+1-h) + higher*(h-k)), so values hash-match the
-              melt/wide layouts and the DuckDB oracle.
+              count / min / max and candidate brackets — the batch's
+              order statistic at p-delta rounded DOWN (method="lower")
+              and at p+delta rounded UP (method="higher"). Only
+              (batch x column) summary rows leave the workers.
+      driver: global count/min/max are exact; the bracket is the
+              min/max envelope of the batch candidates. A counting
+              argument makes it contain both order statistics for ANY
+              batching: if every batch's low candidate exceeded x_k,
+              at most sum_b floor((n_b-1)(p-delta)) <= (n-1)p values
+              would be <= x_k, but there are k+1 > (n-1)p of them (and
+              symmetrically for the high candidates and x_ceil(h)).
+      pass B (mapInPandas): per batch per column, the count of values
+              strictly below each bracket's low end plus the values
+              inside the bracket. The driver merges, sorts, re-checks
+              that both ranks landed inside and interpolates with
+              Catalyst's arithmetic (_interp).
 
-    Scale: both passes shuffle NOTHING — summaries stream back to the
-    driver sized |cols| x |batches|. Driver memory is bounded BY
-    CONSTRUCTION, not by hope: a zero-width envelope (near-constant
-    column, heavy tie mass at the quantile) ships tie COUNTS instead of
-    values and verifies rank membership arithmetically; any batch whose
+    Driver memory is bounded by construction: a zero-width bracket
+    (constant column, heavy tie mass at the quantile) ships tie COUNTS
+    and verifies rank membership arithmetically; a batch whose
     in-bracket selection exceeds ~4x the bracket's expected share
-    (endpoint tie mass, value-clustered/sorted input) flags overflow
-    and the column takes the exact aggregate instead of shipping the
-    blowup. The tight-envelope common case gathers ~2*delta*n per
-    column (0.4% at the default delta). Python cost is one vectorized
-    NumPy pass per batch — no per-row Python anywhere.
+    (value-clustered/sorted input) flags overflow, and that column
+    takes the exact aggregate (_exact_melt_quantiles) instead of
+    shipping the blowup. The common case gathers ~2*delta*n values per
+    column (0.4% at delta=0.002); no pass shuffles cell values.
+
+    The call executes its passes EAGERLY and returns a small local
+    frame.
     """
     import numpy as np
     import pandas as pd
 
     from ..sources.registry import widen_partitions
 
+    spark = wide_df.sparkSession
     metric_cols = [c for c in wide_df.columns if c not in exclude]
     ncols = len(metric_cols)
-    wide_df = widen_partitions(wide_df.select(*metric_cols))
-    spark = wide_df.sparkSession
+    if not ncols:
+        return spark.createDataFrame([], _SCHEMA)
+    cells = widen_partitions(_doubles(wide_df, metric_cols))
+    delta = 0.002
+    p_down = [max(0.0, q_low - delta), max(0.0, q_high - delta)]
+    p_up = [min(1.0, q_low + delta), min(1.0, q_high + delta)]
 
-    p_lo_lo = max(0.0, q_low - delta)
-    p_lo_hi = min(1.0, q_low + delta)
-    p_hi_lo = max(0.0, q_high - delta)
-    p_hi_hi = min(1.0, q_high + delta)
+    def values(pdf, c):
+        # nulls arrive as NaN; the projection already mapped NaN cells
+        # to null, so dropping NaN drops exactly the null cells
+        v = pdf[c].to_numpy(dtype="float64", copy=False)
+        return v[~np.isnan(v)]
 
     def pass_a(batches):
         for pdf in batches:
-            out = {"i": [], "n": [], "mn": [], "mx": [],
-                   "lo1": [], "hi1": [], "lo9": [], "hi9": []}
+            out = {k: [] for k in
+                   ("i", "n", "mn", "mx", "lo1", "hi1", "lo9", "hi9")}
             for i, c in enumerate(metric_cols):
-                v = pd.to_numeric(pdf[c], errors="coerce").to_numpy(
-                    dtype="float64", copy=False
-                )
-                v = v[~np.isnan(v)]
+                v = values(pdf, c)
                 out["i"].append(i)
                 out["n"].append(len(v))
                 if len(v) == 0:
-                    out["mn"].append(None)
-                    out["mx"].append(None)
-                    out["lo1"].append(None)
-                    out["hi1"].append(None)
-                    out["lo9"].append(None)
-                    out["hi9"].append(None)
+                    for k in ("mn", "mx", "lo1", "hi1", "lo9", "hi9"):
+                        out[k].append(None)
                     continue
-                qs = np.quantile(v, [p_lo_lo, p_lo_hi, p_hi_lo, p_hi_hi])
+                lo1, lo9 = np.quantile(v, p_down, method="lower")
+                hi1, hi9 = np.quantile(v, p_up, method="higher")
                 out["mn"].append(float(v.min()))
                 out["mx"].append(float(v.max()))
-                out["lo1"].append(float(qs[0]))
-                out["hi1"].append(float(qs[1]))
-                out["lo9"].append(float(qs[2]))
-                out["hi9"].append(float(qs[3]))
+                out["lo1"].append(float(lo1))
+                out["hi1"].append(float(hi1))
+                out["lo9"].append(float(lo9))
+                out["hi9"].append(float(hi9))
             yield pd.DataFrame(out)
 
-    a_rows = wide_df.mapInPandas(
+    a_rows = cells.mapInPandas(
         pass_a,
         "i int, n long, mn double, mx double, "
         "lo1 double, hi1 double, lo9 double, hi9 double",
@@ -594,49 +184,42 @@ def arrow_extents(
     for r in a_rows:
         i = r["i"]
         n[i] += r["n"]
-        if r["mn"] is not None:
-            mn[i] = r["mn"] if mn[i] is None else min(mn[i], r["mn"])
-            mx[i] = r["mx"] if mx[i] is None else max(mx[i], r["mx"])
-            cand = (r["lo1"], r["hi1"], r["lo9"], r["hi9"])
-            b = br[i]
-            b[0] = cand[0] if b[0] is None else min(b[0], cand[0])
-            b[1] = cand[1] if b[1] is None else max(b[1], cand[1])
-            b[2] = cand[2] if b[2] is None else min(b[2], cand[2])
-            b[3] = cand[3] if b[3] is None else max(b[3], cand[3])
+        if r["mn"] is None:
+            continue
+        mn[i] = r["mn"] if mn[i] is None else min(mn[i], r["mn"])
+        mx[i] = r["mx"] if mx[i] is None else max(mx[i], r["mx"])
+        b = br[i]
+        for j, (key, pick) in enumerate(
+            (("lo1", min), ("hi1", max), ("lo9", min), ("hi9", max))
+        ):
+            b[j] = r[key] if b[j] is None else pick(b[j], r[key])
 
-    probe = {
-        i: tuple(br[i]) for i in range(ncols) if n[i] > 0
-    }
+    probe = {i: tuple(br[i]) for i in range(ncols) if n[i] > 0}
     solved: dict[int, tuple] = {
         i: (None, None) for i in range(ncols) if n[i] == 0
     }
 
     def pass_b(batches):
+        empty = np.array([], dtype="float64")
         for pdf in batches:
-            out = {"i": [], "below1": [], "below9": [], "eq1": [],
-                   "eq9": [], "of1": [], "of9": [], "b1": [], "b9": []}
+            out = {k: [] for k in ("i", "below1", "below9", "eq1", "eq9",
+                                   "of1", "of9", "b1", "b9")}
             for i, c in enumerate(metric_cols):
                 pb = probe.get(i)
                 if pb is None:
                     continue
-                v = pd.to_numeric(pdf[c], errors="coerce").to_numpy(
-                    dtype="float64", copy=False
-                )
-                v = v[~np.isnan(v)]
+                v = values(pdf, c)
                 lo1, hi1, lo9, hi9 = pb
                 # per-batch gather allowance: ~4x the bracket's expected
                 # share of this batch. A zero-width bracket ships COUNTS
                 # only (a tie mass at the quantile costs 0 bytes), and a
-                # batch whose selection blows past the allowance (huge
-                # endpoint ties, value-clustered input) flags overflow
-                # instead of shipping it — the column falls back to the
-                # exact aggregate, keeping driver memory bounded at
-                # ~8*delta*n per column by construction, not by hope.
+                # batch whose selection blows past the allowance flags
+                # overflow instead of shipping it — driver memory stays
+                # at ~8*delta*n per column by construction.
                 cap = int(8.0 * delta * len(v)) + 1024
                 out["i"].append(i)
                 out["below1"].append(int((v < lo1).sum()))
                 out["below9"].append(int((v < lo9).sum()))
-                empty = np.array([], dtype="float64")
                 for lo, hi, eq_k, of_k, b_k in (
                     (lo1, hi1, "eq1", "of1", "b1"),
                     (lo9, hi9, "eq9", "of9", "b9"),
@@ -655,7 +238,7 @@ def arrow_extents(
 
     fallback: list[str] = []
     if probe:
-        b_rows = wide_df.mapInPandas(
+        b_rows = cells.mapInPandas(
             pass_b,
             "i int, below1 long, below9 long, eq1 long, eq9 long, "
             "of1 boolean, of9 boolean, b1 array<double>, b9 array<double>",
@@ -671,47 +254,42 @@ def arrow_extents(
             a[5] = a[5] or r["of9"]
             a[6].append(np.asarray(r["b1"], dtype="float64"))
             a[7].append(np.asarray(r["b9"], dtype="float64"))
-        for i, (below1, below9, eq1, eq9, of1, of9, c1, c2) in acc.items():
+        for i, (below1, below9, eq1, eq9, of1, of9, c1, c9) in acc.items():
             nn = n[i]
             lo1, hi1, lo9, hi9 = probe[i]
-            vals1 = np.sort(np.concatenate(c1)) if c1 else np.array([])
-            vals9 = np.sort(np.concatenate(c2)) if c2 else np.array([])
             res = []
-            for p, below, eq, over, lo, hi, vals in (
-                (q_low, below1, eq1, of1, lo1, hi1, vals1),
-                (q_high, below9, eq9, of9, lo9, hi9, vals9),
+            for p, below, eq, over, lo, hi, chunks in (
+                (q_low, below1, eq1, of1, lo1, hi1, c1),
+                (q_high, below9, eq9, of9, lo9, hi9, c9),
             ):
-                k = math.floor((nn - 1) * p)
-                k1 = min(math.ceil((nn - 1) * p), nn - 1)
-                ii, jj = k - below, k1 - below
+                ii = math.floor((nn - 1) * p) - below
+                jj = min(math.ceil((nn - 1) * p), nn - 1) - below
                 if over:
                     res.append(None)  # gather cap hit -> exact fallback
                 elif lo == hi:
                     # counts-only verification: both ranks must land in
                     # the tie run at the (zero-width) envelope value
-                    if ii < 0 or jj >= eq:
-                        res.append(None)
-                    else:
-                        res.append(_interp(lo, hi, nn, p))
-                elif ii < 0 or jj >= len(vals):
-                    res.append(None)  # envelope missed -> exact fallback
+                    ok = ii >= 0 and jj < eq
+                    res.append(_interp(lo, hi, nn, p) if ok else None)
                 else:
-                    res.append(
-                        _interp(float(vals[ii]), float(vals[jj]), nn, p)
-                    )
-            if res[0] is None or res[1] is None:
+                    vals = np.sort(np.concatenate(chunks))
+                    if ii < 0 or jj >= len(vals):
+                        res.append(None)  # envelope missed -> exact
+                    else:
+                        res.append(
+                            _interp(float(vals[ii]), float(vals[jj]), nn, p)
+                        )
+            if None in res:
                 fallback.append(metric_cols[i])
             else:
                 solved[i] = tuple(res)
 
     if fallback:
-        fb = _exact_melt_quantiles(wide_df, fallback, q_low, q_high)
+        fb = _exact_melt_quantiles(cells, fallback, q_low, q_high)
         for c, qs in fb.items():
             solved[metric_cols.index(c)] = qs
 
     rows = [
         (metric_cols[i], mn[i], mx[i], *solved[i]) for i in range(ncols)
     ]
-    return spark.createDataFrame(
-        rows, "id string, min double, max double, q1 double, q99 double"
-    )
+    return spark.createDataFrame(rows, _SCHEMA)

@@ -2751,7 +2751,7 @@ def ann_index_write(
         # explicit count keeps at least session parallelism. At sf0.1
         # k=1 (one file per cell); unknown input size keeps k=1 —
         # layout stays valid, only the fan-out heuristic degrades.
-        from .extents import _input_file_bytes
+        from ..sources.registry import _input_file_bytes
 
         src_bytes = _input_file_bytes(coded_df)
         k = max(1, -(-max(src_bytes, 0) // _CODED_SALT_TARGET_BYTES))

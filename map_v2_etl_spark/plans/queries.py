@@ -80,9 +80,8 @@ _EXTENT_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 )
 def q_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column min/max/exact R-7 percentiles (SURVEY §2.4 A2-A5) — the
-    extract-extents.js operator. Few columns -> the operator picks the
-    wide-aggregation layout (no cell values ever shuffle); many columns
-    would switch to melt + groupBy(column)."""
+    extract-extents.js operator: the Arrow two-pass order-statistic
+    selection, which never shuffles cell values."""
     from ..operators.extents import column_extents
 
     li = load_table(spark, "lineitem", sf_dir).select(*_EXTENT_COLS)

@@ -49,6 +49,49 @@ def widen_partitions(df: DataFrame) -> DataFrame:
     return df
 
 
+def _input_file_bytes(df: DataFrame) -> int:
+    """Total size of the scan's input files — pure file-index metadata
+    (the widen_partitions discipline: never touch df.rdd here).
+
+    Returns 0 when the plan is not a file scan at all (derived/local
+    frames), and -1 — UNKNOWN — when a scan exists but its sizes cannot
+    be determined; callers sizing work from it must not read -1 as
+    small. ``file:`` and bare paths stat locally; every other scheme
+    (s3a://, hdfs://, viewfs://) stats through the Hadoop FileSystem
+    API (metadata RPCs only; Hadoop caches one FS instance per scheme)."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return -1  # cannot even enumerate: unknown
+    total = 0
+    remote: list[str] = []
+    for f in files:
+        if f.startswith("file:"):
+            try:
+                total += os.path.getsize(f.removeprefix("file:"))
+            except OSError:
+                return -1
+        elif "://" not in f:  # bare local path
+            try:
+                total += os.path.getsize(f)
+            except OSError:
+                return -1
+        else:
+            remote.append(f)
+    if remote:
+        try:
+            sess = df.sparkSession
+            jvm = sess._jvm
+            hconf = sess._jsc.hadoopConfiguration()
+            for f in remote:
+                p = jvm.org.apache.hadoop.fs.Path(f)
+                fs = p.getFileSystem(hconf)
+                total += fs.getFileStatus(p).getLen()
+        except Exception:
+            return -1  # unstatable remote scan: unknown
+    return total
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     # nanosAsLong is a runtime-settable SQL conf; set it here (not only in
     # session.get_spark) so events.parquet (TIMESTAMP_NS) reads succeed even

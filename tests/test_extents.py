@@ -2,8 +2,39 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+import map_v2_etl_spark.operators.extents as X
 from map_v2_etl_spark.operators.extents import column_extents
+
+
+def exact_extents(df, exclude=("GEOID", "n", "pl")):
+    """Reference rows from Spark's exact aggregates under the same cell
+    rule: min/max over the normalized doubles, quantiles from the exact
+    percentile fallback."""
+    cols = [c for c in df.columns if c not in exclude]
+    mm = X._doubles(df, cols).agg(
+        *[f(c) for c in cols for f in (F.min, F.max)]
+    ).first()
+    qs = X._exact_melt_quantiles(df, cols, 0.01, 0.99)
+    return [
+        (c, mm[2 * i], mm[2 * i + 1], *qs.get(c, (None, None)))
+        for i, c in enumerate(cols)
+    ]
+
+
+def spy_fallback(monkeypatch):
+    """Record the column lists column_extents sends to the exact
+    fallback."""
+    calls: list = []
+    orig = X._exact_melt_quantiles
+
+    def spy(*a, **k):
+        calls.append(list(a[1]))
+        return orig(*a, **k)
+
+    monkeypatch.setattr(X, "_exact_melt_quantiles", spy)
+    return calls
 
 
 def test_extents_r7_quantiles(spark):
@@ -57,18 +88,11 @@ def test_extents_bounds_property(spark):
 
 
 def test_extents_four_paths_fuzz_bit_identical(spark):
-    """Randomized bit-equality net over ALL FOUR extents layouts —
-    exact percentile agg (auto/wide/melt), sketch-bracketed selection,
-    and the Arrow two-pass path — on adversarial columns: heavy ties,
-    constants, non-numeric and 'NaN' strings, nulls, row counts on both
-    sides of the bracket path's 4*accuracy exact-direct gate. Same
-    discipline as the r12 regime-switch fuzz sweep."""
+    """Randomized bit-equality net: column_extents against the exact
+    aggregate on adversarial columns — heavy ties, constants,
+    non-numeric and 'NaN' strings, nulls, at a tiny and a moderate row
+    count. Same discipline as the r12 regime-switch fuzz sweep."""
     import random
-
-    from map_v2_etl_spark.operators.extents import (
-        arrow_extents,
-        sketch_extents,
-    )
 
     rng = random.Random(9)
 
@@ -90,7 +114,7 @@ def test_extents_four_paths_fuzz_bit_identical(spark):
 
     for trial in range(3):
         ncols = rng.randint(2, 5)
-        nrows = rng.choice([8, 150])  # below / above the bracket gate
+        nrows = rng.choice([8, 150])
         kinds = [
             rng.choice(["ties", "const", "int", "cont"])
             for _ in range(ncols)
@@ -101,77 +125,19 @@ def test_extents_four_paths_fuzz_bit_identical(spark):
             for j in range(nrows)
         ]
         df = spark.createDataFrame(rows, ["GEOID"] + cols)
-        base = [tuple(r) for r in column_extents(df).collect()]
-        for label, alt in (
-            ("sketch", sketch_extents(df, accuracy=25)),
-            ("arrow", arrow_extents(df)),
-            ("wide-layout", column_extents(df, layout="wide")),
-            ("melt-layout", column_extents(df, layout="melt")),
-        ):
-            got = [tuple(r) for r in alt.collect()]
-            assert got == base, (
-                f"trial {trial} path={label} kinds={kinds} "
-                f"rows={nrows}:\n base={base}\n got={got}"
-            )
-
-
-def test_sketch_extents_bit_identical_bracket_path(spark):
-    # accuracy=25 forces n=200 columns through the bracket path
-    # (4*25=100 < 200) — results must be BIT-identical to the exact agg
-    rng = np.random.RandomState(11)
-    rows = [
-        (
-            "g%03d" % i,
-            "n",
-            "p",
-            float(rng.lognormal(0, 2)),
-            float(rng.randint(0, 5)),  # heavy duplicates
-            7.5,  # constant column (zero-width bracket shortcut)
-            float(i),
+        base = exact_extents(df)
+        got = [tuple(r) for r in column_extents(df).collect()]
+        assert got == base, (
+            f"trial {trial} kinds={kinds} rows={nrows}:\n"
+            f" base={base}\n got={got}"
         )
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, ["GEOID", "n", "pl", "a-00", "b-00", "c-00", "d-00"]
-    )
-    from map_v2_etl_spark.operators.extents import sketch_extents
-
-    exact = [tuple(r) for r in column_extents(df, layout="melt").collect()]
-    sk = [tuple(r) for r in sketch_extents(df, accuracy=25).collect()]
-    assert sk == exact
 
 
-def test_sketch_extents_edge_columns(spark):
-    # all-null, single-value, and two-value columns (small-n exact path)
-    rows = [
-        ("01", "n", "p", None, 4.0, 1.0),
-        ("02", "n", "p", None, None, 9.0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "GEOID string, n string, pl string, "
-        "`x-00` double, `y-00` double, `z-00` double",
-    )
-    from map_v2_etl_spark.operators.extents import sketch_extents
-
-    exact = [tuple(r) for r in column_extents(df, layout="melt").collect()]
-    sk = [tuple(r) for r in sketch_extents(df).collect()]
-    assert sk == exact
-    assert sk[0][1] is None  # all-null column: min is null
-
-
-def test_arrow_extents_matches_melt_bit_for_bit(spark):
-    """The Arrow two-pass path must reproduce the melt layout exactly,
+def test_extents_match_exact_aggregate_bit_for_bit(spark):
+    """column_extents reproduces the exact aggregate bit for bit,
     including NaN-drop, all-null columns, constant columns (zero-width
     brackets), and fractional-rank interpolation."""
     import math
-
-    from pyspark.sql import functions as F
-
-    from map_v2_etl_spark.operators.extents import (
-        arrow_extents,
-        column_extents,
-    )
 
     rows = []
     for i in range(997):
@@ -188,56 +154,40 @@ def test_arrow_extents_matches_melt_bit_for_bit(spark):
     df = spark.createDataFrame(
         rows, "GEOID string, a double, b double, c double, d double, e double"
     )
-    melt = column_extents(df, layout="melt").collect()
-    arrow = arrow_extents(df).collect()
-    assert [tuple(r) for r in melt] == [tuple(r) for r in arrow]
+    got = [tuple(r) for r in column_extents(df).collect()]
+    assert got == exact_extents(df)
 
 
-def test_arrow_extents_heavy_tie_counts_only_no_fallback(spark):
+def test_extents_heavy_tie_counts_only_no_fallback(spark, monkeypatch):
     """A column whose q1 sits inside a large tie mass produces a
-    zero-width envelope; the fix ships tie COUNTS (no value gather) and
+    zero-width envelope; pass B ships tie COUNTS (no value gather) and
     must solve it WITHOUT the exact fallback — and still bit-match the
-    melt layout."""
+    exact aggregate."""
     import random
 
-    import map_v2_etl_spark.operators.extents as X
-
     rng = random.Random(3)
-    # ~30% zeros scattered everywhere -> every batch's [p-d, p+d]
-    # quantiles at p=0.01 are 0.0 -> zero-width envelope
+    # ~30% zeros scattered everywhere -> every batch's candidates around
+    # p=0.01 are 0.0 -> zero-width envelope
     rows = [
         (0.0 if rng.random() < 0.3 else rng.uniform(1.0, 100.0),)
         for _ in range(20000)
     ]
     df = spark.createDataFrame(rows, "m DOUBLE").repartition(8)
 
-    calls: list = []
-    orig = X._exact_melt_quantiles
-
-    def spy(*a, **k):
-        calls.append(a[1])
-        return orig(*a, **k)
-
-    X._exact_melt_quantiles = spy
-    try:
-        arrow = X.arrow_extents(df, exclude=()).collect()
-    finally:
-        X._exact_melt_quantiles = orig
+    calls = spy_fallback(monkeypatch)
+    got = [tuple(r) for r in column_extents(df, exclude=()).collect()]
     assert calls == []  # counts-only path solved it, zero fallback
-    melt = X.column_extents(df, exclude=(), layout="melt").collect()
-    assert [tuple(r) for r in arrow] == [tuple(r) for r in melt]
-    assert arrow[0]["q1"] == 0.0
+    monkeypatch.undo()
+    assert got == exact_extents(df, exclude=())
+    assert got[0][3] == 0.0
 
 
-def test_arrow_extents_value_clustered_overflow_falls_back_exact(spark):
+def test_extents_value_clustered_overflow_falls_back_exact(spark, monkeypatch):
     """Value-clustered (range-partitioned) input makes the candidate
     envelope span nearly the whole column; the per-batch gather cap
     must flag overflow and route the column to the exact aggregate —
-    results still bit-match melt instead of OOMing the driver."""
+    results still bit-match instead of OOMing the driver."""
     import random
-
-    import map_v2_etl_spark.operators.extents as X
-    from pyspark.sql import functions as F
 
     rng = random.Random(5)
     rows = [(rng.uniform(0.0, 1000.0),) for _ in range(40000)]
@@ -246,105 +196,71 @@ def test_arrow_extents_value_clustered_overflow_falls_back_exact(spark):
         .repartitionByRange(8, F.col("m"))  # batches = value ranges
     )
 
-    calls: list = []
-    orig = X._exact_melt_quantiles
-
-    def spy(*a, **k):
-        calls.append(list(a[1]))
-        return orig(*a, **k)
-
-    X._exact_melt_quantiles = spy
-    try:
-        arrow = X.arrow_extents(df, exclude=()).collect()
-    finally:
-        X._exact_melt_quantiles = orig
+    calls = spy_fallback(monkeypatch)
+    got = [tuple(r) for r in column_extents(df, exclude=()).collect()]
     assert calls == [["m"]]  # overflow detected -> exact fallback ran
-    melt = X.column_extents(df, exclude=(), layout="melt").collect()
-    assert [tuple(r) for r in arrow] == [tuple(r) for r in melt]
+    monkeypatch.undo()
+    assert got == exact_extents(df, exclude=())
 
 
-def test_sketch_extents_presolved_side_gathers_nothing(spark):
-    """A heavy tie mass pre-solves q1 with a zero-width bracket; the
-    solved side's NULL bounds must keep pass B from gathering its tie
-    run, and the (value,count) compression bounds the other side.
-    Result bit-matches the exact layout."""
-    import random
-
-    from map_v2_etl_spark.operators.extents import (
-        column_extents,
-        sketch_extents,
-    )
-
-    rng = random.Random(7)
-    # accuracy=100 -> n > 4*accuracy engages the sketch path at n=20k;
-    # 35% zeros pre-solve q1; q99 needs the bracket gather
+def test_extents_small_batches_never_fall_back(spark, monkeypatch):
+    """Batches of ~60 rows (a county-sized table over 4 partitions):
+    the envelope of per-batch candidates rounded down at p-delta and up
+    at p+delta contains both order statistics for any batching, so no
+    column reaches the exact fallback. Linearly interpolated candidates
+    would miss an order statistic on 5 of these 40 columns."""
+    rng = np.random.RandomState(1)
+    ncols, nrows = 40, 240
+    data = rng.lognormal(0.0, 1.0, size=(nrows, ncols)).round(2)
+    data[rng.rand(nrows, ncols) < 0.05] = np.nan
+    cols = [f"p-{i:02d}" for i in range(ncols)]
     rows = [
-        (0.0 if rng.random() < 0.35 else rng.uniform(1.0, 500.0),)
-        for _ in range(20000)
+        (f"g{j:03d}",) + tuple(
+            None if np.isnan(x) else float(x) for x in data[j]
+        )
+        for j in range(nrows)
     ]
-    df = spark.createDataFrame(rows, "m DOUBLE").repartition(8)
-    sk = [tuple(r) for r in sketch_extents(df, exclude=(), accuracy=100).collect()]
-    ex = [tuple(r) for r in column_extents(df, exclude=(), layout="melt").collect()]
-    assert sk == ex
-    assert sk[0][3] == 0.0  # q1 from the tie mass
+    df = spark.createDataFrame(
+        rows,
+        "GEOID string, " + ", ".join(f"`{c}` double" for c in cols),
+    ).repartition(4)
+
+    calls = spy_fallback(monkeypatch)
+    got = [tuple(r) for r in column_extents(df).collect()]
+    assert calls == []
+    monkeypatch.undo()
+    assert got == exact_extents(df)
 
 
-def test_auto_dispatch_byte_gate_switches_off_wide(spark, tmp_path, monkeypatch):
-    """r17: auto-dispatch must abandon the wide layout above the input
-    byte gate (its exact percentile buffers every cell on ONE final
-    reducer) — all-numeric file-backed inputs go to the Arrow path,
-    mixed-type ones to melt — and the results stay bit-identical."""
-    import map_v2_etl_spark.operators.extents as X
+def test_extents_no_metric_columns_is_empty(spark):
+    df = spark.createDataFrame([("01", "a", "x")], ["GEOID", "n", "pl"])
+    out = column_extents(df)
+    assert out.columns == ["id", "min", "max", "q1", "q99"]
+    assert out.collect() == []
 
-    num = spark.createDataFrame(
-        [(float(i), float(i % 7)) for i in range(500)], "a double, b double"
+
+@pytest.mark.parametrize("dtype", ["double", "string"])
+def test_extents_zero_rows_one_null_row_per_column(spark, dtype):
+    df = spark.createDataFrame(
+        [], f"GEOID string, `a-00` {dtype}, `b-00` {dtype}"
     )
-    p_num = str(tmp_path / "num.parquet")
-    num.write.parquet(p_num)
-    num_df = spark.read.parquet(p_num)
-
-    # below the gate (default 2 GiB): wide layout (lazy, stack reshape)
-    wide_out = X.column_extents(num_df, exclude=())
-    assert "stack" in wide_out._jdf.queryExecution().analyzed().toString()
-
-    monkeypatch.setattr(X, "WIDE_AGG_MAX_BYTES", 1)
-    # above the gate, all-numeric: Arrow two-pass (eager local frame)
-    arrow_out = X.column_extents(num_df, exclude=())
-    assert "stack" not in arrow_out._jdf.queryExecution().analyzed().toString()
-    assert [tuple(r) for r in arrow_out.collect()] == [
-        tuple(r) for r in wide_out.collect()
+    got = [tuple(r) for r in column_extents(df).collect()]
+    assert got == [
+        ("a-00", None, None, None, None),
+        ("b-00", None, None, None, None),
     ]
-
-    # above the gate, mixed types: melt (lazy, per-column reducers)
-    mix = spark.createDataFrame(
-        [(float(i), str(i % 5)) for i in range(500)], "a double, s string"
-    )
-    p_mix = str(tmp_path / "mix.parquet")
-    mix.write.parquet(p_mix)
-    mix_df = spark.read.parquet(p_mix)
-    melt_out = X.column_extents(mix_df, exclude=())
-    plan = melt_out._jdf.queryExecution().analyzed().toString()
-    assert "stack" not in plan
-    monkeypatch.setattr(X, "WIDE_AGG_MAX_BYTES", 2 << 30)
-    assert [tuple(r) for r in melt_out.collect()] == [
-        tuple(r) for r in X.column_extents(mix_df, exclude=()).collect()
-    ]
-
-    # non-file-backed frames never switch (byte estimate is 0)
-    monkeypatch.setattr(X, "WIDE_AGG_MAX_BYTES", 1)
-    local_out = X.column_extents(num, exclude=())
-    assert "stack" in local_out._jdf.queryExecution().analyzed().toString()
 
 
 def test_byte_gate_remote_scheme_sizes_via_hadoop(spark, tmp_path, monkeypatch):
-    """r18 (VERDICT r17 item 1): the byte gate must work off the local
-    filesystem. Non-``file:`` URIs are statted through the Hadoop
-    FileSystem API — exercised here through a ``viewfs://`` mount over
-    the local test directory (a real non-file scheme Hadoop resolves
-    without a cluster) — and a scheme Hadoop cannot resolve makes the
-    size UNKNOWN, which the exact few-column branch treats as BIG
-    (bounded layout), never as small."""
-    import map_v2_etl_spark.operators.extents as X
+    """_input_file_bytes (the salt sizing of ann_index_write) must work
+    off the local filesystem. Non-``file:`` URIs are statted through the
+    Hadoop FileSystem API — exercised here through a ``viewfs://`` mount
+    over the local test directory (a real non-file scheme Hadoop
+    resolves without a cluster) — and a scheme Hadoop cannot resolve
+    makes the size UNKNOWN (-1), never small."""
+    import os
+
+    from map_v2_etl_spark.sources.registry import _input_file_bytes
 
     num = spark.createDataFrame(
         [(float(i), float(i % 7)) for i in range(500)], "a double, b double"
@@ -365,33 +281,14 @@ def test_byte_gate_remote_scheme_sizes_via_hadoop(spark, tmp_path, monkeypatch):
     )
 
     # Hadoop-resolvable remote scheme: sizes add up to the real bytes
-    sz = X._input_file_bytes(num_df)
-    import os
     expect = sum(
         os.path.getsize(f.removeprefix("file:")) for f in real_files
     )
-    assert sz == expect
+    assert _input_file_bytes(num_df) == expect
 
-    # gate fires through the remote sizing exactly like the local path
-    monkeypatch.setattr(X, "WIDE_AGG_MAX_BYTES", 1)
-    out = X.column_extents(num_df, exclude=())
-    assert "stack" not in out._jdf.queryExecution().analyzed().toString()
-
-    # unresolvable scheme: UNKNOWN (-1), and the exact few-column
-    # branch goes bounded even below the byte gate (fail safe)
+    # unresolvable scheme: UNKNOWN
     bad_files = [f.replace("file:", "nosuchfs://x") for f in real_files]
     monkeypatch.setattr(
         type(num_df), "inputFiles", lambda self: bad_files
     )
-    assert X._input_file_bytes(num_df) == -1
-    monkeypatch.setattr(X, "WIDE_AGG_MAX_BYTES", 2 << 30)
-    out2 = X.column_extents(num_df, exclude=())
-    assert "stack" not in out2._jdf.queryExecution().analyzed().toString()
-
-    # results are unchanged by the dispatch — bit-identical to wide
-    wide_out = X.column_extents(
-        spark.read.parquet(p_num), exclude=(), layout="wide"
-    )
-    assert sorted(map(tuple, out2.collect())) == sorted(
-        map(tuple, wide_out.collect())
-    )
+    assert _input_file_bytes(num_df) == -1

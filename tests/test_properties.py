@@ -58,12 +58,11 @@ def test_extents_drop_nan_like_d3():
     df = _spark.createDataFrame(
         [(1.0,), (float("nan"),), (3.0,), (None,)], ["m"]
     )
-    for layout in ("wide", "melt"):
-        row = column_extents(df, exclude=(), layout=layout).collect()[0]
-        assert row["min"] == 1.0
-        assert row["max"] == 3.0          # NaN would win without the guard
-        assert math.isclose(row["q99"], 2.98)  # R-7 over [1, 3] at 0.99
-        assert not math.isnan(row["q1"])
+    row = column_extents(df, exclude=()).collect()[0]
+    assert row["min"] == 1.0
+    assert row["max"] == 3.0          # NaN would win without the guard
+    assert math.isclose(row["q99"], 2.98)  # R-7 over [1, 3] at 0.99
+    assert not math.isnan(row["q1"])
 
 
 @settings(

@@ -4,8 +4,8 @@ continuing the SURVEY §5 strategy in tests/test_properties.py).
 Small per-example data, few examples (sessions are expensive), but the
 properties cover the semantic axes an example-based test can miss:
 arbitrary text for block dedup idempotence, arbitrary timestamp sets for
-as-of ordering, arbitrary value sets for histogram conservation and the
-arrow/melt extents agreement.
+as-of ordering, arbitrary value sets for histogram conservation and
+extents agreement with the exact aggregate.
 """
 
 import pytest
@@ -117,13 +117,16 @@ def test_asof_backward_forward_bracket_the_left_ts(left_ts, right_ts):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(finite_doubles, min_size=2, max_size=50))
-def test_arrow_extents_agrees_with_melt_on_arbitrary_doubles(values):
+def test_extents_agree_with_exact_on_arbitrary_doubles(values):
+    import numpy as np
+
     from map_v2_etl_spark.operators.extents import (
-        arrow_extents,
+        _exact_melt_quantiles,
         column_extents,
     )
 
     df = _spark.createDataFrame([(float(v),) for v in values], ["m"])
-    a = arrow_extents(df, exclude=()).collect()
-    b = column_extents(df, exclude=(), layout="melt").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    got = tuple(column_extents(df, exclude=()).collect()[0])
+    arr = np.array(values, dtype="float64")
+    q1, q99 = _exact_melt_quantiles(df, ["m"], 0.01, 0.99)["m"]
+    assert got == ("m", arr.min(), arr.max(), q1, q99)
